@@ -6,12 +6,13 @@ delete, the next backup) resume from durable state
 (/root/reference/src/recipe/recipestore.c:285-400,
 /root/reference/src/destor.c:78-213).
 
-Spark restatement: every pipeline stage writes its output as parquet
-(Iceberg when a catalog is configured — same call sites, see
-sources/catalog.py) plus a manifest json carrying
-(run_id, stage, rows, per-partition row counts, wall seconds).  A
-re-entrant run loads any stage whose manifest says complete instead of
-recomputing — resume-equals-fresh is pinned by tests/test_resume.py.
+Spark restatement: a durable stage writes its output as parquet plus a
+manifest json carrying (run_id, stage, rows, per-write-partition row
+counts, wall seconds).  The manifest is filled from the footers of the
+part files just written, on the driver: a stage costs its parquet
+write and no other Spark job.  A re-entrant run loads any stage whose
+manifest says complete instead of recomputing — resume-equals-fresh is
+pinned by tests/test_resume.py.
 """
 
 from __future__ import annotations
@@ -20,8 +21,8 @@ import json
 import os
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class StageRunner:
@@ -73,7 +74,6 @@ class StageRunner:
         self,
         stage: str,
         fn,
-        repartition: int | None = None,
         required_cols: tuple[str, ...] = (),
     ) -> DataFrame:
         """fn() -> DataFrame; materialized once, loaded on resume.
@@ -89,8 +89,6 @@ class StageRunner:
                 return out
         t0 = time.time()
         df = fn()
-        if repartition:
-            df = df.repartition(repartition)
         # invalidate BEFORE the data overwrite: mode('overwrite')
         # deletes the old parquet first, so a crash mid-recompute must
         # not leave a stale 'complete' manifest (written under an
@@ -105,30 +103,29 @@ class StageRunner:
                 )
             os.replace(tmp, mpath)
         df.write.mode("overwrite").parquet(data_dir)
-        # wall stops at the durable write: the lineage/metrics queries
-        # below re-read the output and would otherwise be billed to the
-        # stage, systematically understating throughput_mb_s
+        # wall stops at the durable write: reading the footers below is
+        # bookkeeping, not stage work
         wall = time.time() - t0
-        out = self.spark.read.parquet(data_dir)
-        part_rows = {
-            str(r["pid"]): r["rows"]
-            for r in out.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        }
-        # jcr restore-report analogue (/root/reference/src/do_restore.c:
-        # 243-277): data size, throughput MB/s, and the speed factor —
-        # destor normalizes restored bytes by containers READ; the
-        # parquet restatement normalizes stage bytes by files written
-        # (the unit a downstream stage must open), same packing-density
-        # meaning.
+        # jcr restore-report analogue (destor's src/do_restore.c:243-277):
+        # data size, throughput MB/s, and the speed factor — destor
+        # normalizes restored bytes by containers READ; the parquet
+        # restatement normalizes stage bytes by files written (the unit
+        # a downstream stage must open), same packing-density meaning.
+        # Rows come from each part file's footer, keyed by the write
+        # task number in part-NNNNN-...: no Spark job.
+        part_rows: dict[str, int] = {}
         data_size = 0
         n_files = 0
         for dp, _, fns in os.walk(data_dir):
-            for name in fns:
+            for name in sorted(fns):
                 if name.endswith(".parquet"):
-                    data_size += os.path.getsize(os.path.join(dp, name))
+                    path = os.path.join(dp, name)
+                    data_size += os.path.getsize(path)
                     n_files += 1
+                    task = str(int(name.split("-")[1]))
+                    part_rows[task] = part_rows.get(task, 0) + (
+                        pq.read_metadata(path).num_rows
+                    )
         manifest = {
             "status": "complete",
             "run_id": self.run_id,
@@ -155,7 +152,8 @@ class StageRunner:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, mpath)
         self._append_metrics(manifest)
-        return out
+        # the write's own schema: reading it back runs no inference job
+        return self.spark.read.schema(df.schema).parquet(data_dir)
 
     def _append_metrics(self, manifest: dict) -> None:
         """jcr-equivalent metrics log (/root/reference/src/jcr.h:19-61)."""

@@ -8,9 +8,10 @@ stage group with an optional durable checkpoint between them
   read/extract -> exact pass -> signatures -> LSH pairs -> verify
      -> [simhash pass] -> union-find -> assignments
 
-`run_pipeline` is the pure in-memory composition (tests, benchmarks);
-`run_checkpointed` wraps every stage in a StageRunner so a killed job
-resumes from the last complete stage with lineage + metrics.
+`run_pipeline` is the in-memory composition (tests, benchmarks), with
+ephemeral parquet barriers at the signatures and edges links;
+`run_checkpointed` makes five stages durable through a StageRunner, so a
+killed job resumes from the last complete one with lineage + metrics.
 """
 
 from __future__ import annotations
@@ -272,7 +273,7 @@ def run_pipeline(
     # (exchange-reuse canonicalization that held at 2M broke at 4M),
     # ~90 s of the 8-core leg's wall.  A ~100 B/edge parquet barrier
     # makes the fan-out O(edges), deterministically, at every scale.
-    # (run_checkpointed already barriers edges via sr.run("edges").)
+    # (run_checkpointed barriers the same link via sr.run("edges").)
     all_edges = _materialize(all_edges, "edges", root)
 
     comps = cluster_op.connected_components(all_edges, cfg.max_cc_rounds)
@@ -354,8 +355,11 @@ def run_checkpointed(
     use_simhash: bool = True,
     use_substring: bool = False,
 ) -> DataFrame:
-    """Checkpointed variant: every stage durable, resume from the last
-    complete one (destor recipe semantics)."""
+    """Checkpointed variant: five durable stages, resume from the last
+    complete one (destor recipe semantics).  A stage is durable where a
+    second consumer or resume needs it; destor itself keeps only the
+    recipe and containers, its inter-phase queues stay in memory
+    (do_backup.c:32-41)."""
     sr = StageRunner(
         spark,
         ckpt_dir,
@@ -363,9 +367,9 @@ def run_checkpointed(
         context_fp=config_fingerprint(cfg, use_simhash, use_substring),
     )
 
-    # ONE text scan: content_sha rides in the signature stage (see
-    # signatures_stage docstring); the checkpointed sigs table then
-    # feeds the exact self-join without re-reading raw text.
+    # signatures: the Arrow UDF stage, read by the exact, LSH, verify
+    # and simhash passes.  ONE text scan: content_sha rides in it (see
+    # signatures_stage docstring), so the exact pass re-reads no text.
     sigs = sr.run(
         "signatures",
         lambda: signatures_stage(pages, cfg, with_sha=True),
@@ -374,16 +378,7 @@ def run_checkpointed(
         # resuming one would fail at the exact pass's select below
         required_cols=("url", "warc_ts", "content_sha"),
     )
-    exact_edges = sr.run(
-        "exact_edges",
-        lambda: exact_op.exact_pairs(
-            sigs.select("url", "warc_ts", "content_sha")
-        ),
-    )
-    pairs = sr.run(
-        "candidate_pairs", lambda: lsh_op.candidate_pairs(sigs, cfg)[0]
-    )
-    # bucket_stats persisted per run: the destor-HAR pattern — this
+    # bucket_stats: persisted per run, the destor-HAR pattern — this
     # run's hot-bucket inventory informs the next run's salting and is
     # part of the per-partition lineage (har_rewrite.c:17-180 inherits
     # the previous backup's sparse-container list the same way).
@@ -394,17 +389,27 @@ def run_checkpointed(
         "bucket_stats",
         lambda: lsh_op.bucket_stats_only(lsh_op.explode_bands(sigs), cfg),
     )
-    verified = sr.run(
-        "verified_pairs", lambda: verify_op.verify_pairs(pairs, sigs, cfg)
-    )
 
-    edges = sr.run(
-        "edges",
-        lambda: _edge_union(
+    # edges: CC references the relation 4x (see run_pipeline), and it is
+    # the pair-level output a caller audits.  The exact, candidate and
+    # verified pair relations each feed only this stage, so they are
+    # planned inside it: no write of their own, and a resume past edges
+    # never plans them (same single-consumer audit as run_pipeline).
+    def edge_union() -> DataFrame:
+        exact_edges = exact_op.exact_pairs(
+            sigs.select("url", "warc_ts", "content_sha")
+        )
+        pairs, _ = lsh_op.candidate_pairs(sigs, cfg)
+        verified = verify_op.verify_pairs(pairs, sigs, cfg)
+        return _edge_union(
             pages, sigs, exact_edges, verified, cfg,
             use_simhash, use_substring,
-        ),
-    )
+        )
+
+    edges = sr.run("edges", edge_union)
+    # components: the union-find result; a resume with it complete skips
+    # every star round.  assignments: the job's output, which a rerun on
+    # a completed dir returns without recomputing anything.
     comps = sr.run(
         "components",
         lambda: cluster_op.connected_components(edges, cfg.max_cc_rounds),

@@ -52,13 +52,11 @@ def test_metrics_lineage(spark, cfg, smoke_corpus, ckpt_dir):
     ]
     stages = [m["stage"] for m in metrics]
     # content_hashes no longer a separate stage: sha2 rides in the
-    # signatures text scan (r3 single-scan fusion)
+    # signatures text scan (r3 single-scan fusion); the single-consumer
+    # exact/candidate/verified pair links are planned inside edges
     assert stages == [
         "signatures",
-        "exact_edges",
-        "candidate_pairs",
         "bucket_stats",
-        "verified_pairs",
         "edges",
         "components",
         "assignments",
@@ -91,13 +89,32 @@ def test_resume_recomputes_old_layout_signatures(spark, cfg, smoke_corpus,
     old.write.mode("overwrite").parquet(sig_dir + "_old")
     shutil.rmtree(sig_dir)
     os.rename(sig_dir + "_old", sig_dir)
-    for stage in ("exact_edges", "candidate_pairs", "bucket_stats",
-                  "verified_pairs", "edges", "components", "assignments"):
+    for stage in ("bucket_stats", "edges", "components", "assignments"):
         os.remove(os.path.join(ckpt_dir, f"{stage}.manifest.json"))
         shutil.rmtree(os.path.join(ckpt_dir, stage))
 
     resumed = _assign_pdf(run_checkpointed(spark, pages, cfg, ckpt_dir, "rF"))
     pd.testing.assert_frame_equal(fresh, resumed, check_dtype=False)
+
+
+def test_checkpointed_equals_batch_pipeline(spark, cfg, smoke_corpus,
+                                            ckpt_dir):
+    """Both paths barrier the same links (signatures, edges) over the
+    same edge relation: their assignments must not drift apart."""
+    from destor_spark.plans.pipeline import run_pipeline
+
+    pages_pd, _ = smoke_corpus
+    pages = spark.createDataFrame(pages_pd)
+    cols = ["url", "cluster_id", "is_canonical"]
+    res = run_pipeline(pages, cfg, use_substring=True)
+    batch = _assign_pdf(res.assignments.select(*cols))
+    res.cleanup()
+    ckpt = _assign_pdf(
+        run_checkpointed(spark, pages, cfg, ckpt_dir, use_substring=True)
+        .select(*cols)
+    )
+    assert len(ckpt) == len(pages_pd)
+    pd.testing.assert_frame_equal(batch, ckpt, check_dtype=False)
 
 
 def test_resume_recomputes_on_config_change(spark, smoke_corpus, ckpt_dir):
@@ -143,11 +160,58 @@ def test_corrupt_manifest_recomputes_not_crashes(
     pages = spark.createDataFrame(pages_pd)
     a = _assign_pdf(run_checkpointed(spark, pages, cfg, ckpt_dir))
     # truncate one manifest as a mid-write crash would
-    mpath = os.path.join(ckpt_dir, "verified_pairs.manifest.json")
+    mpath = os.path.join(ckpt_dir, "edges.manifest.json")
     with open(mpath, "w") as f:
         f.write('{"status": "comp')
     b = _assign_pdf(run_checkpointed(spark, pages, cfg, ckpt_dir))
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_stage_manifest_from_footers_one_job(spark, tmp_path):
+    """A durable stage costs its parquet write and nothing else: the
+    manifest's row counts come from the part files' footers (no re-read
+    job, no schema-inference job), keyed by write partition."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from destor_spark.plans.checkpoint import StageRunner
+
+    sc = spark.sparkContext
+    base = str(tmp_path / "ck")
+    sr = StageRunner(spark, base, run_id="rJ")
+    sc.setJobGroup("stage-runner-jobs", "StageRunner.run bookkeeping")
+    try:
+        out = sr.run("r", lambda: spark.range(10))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("stage-runner-jobs")) == 1
+
+    with open(os.path.join(base, "r.manifest.json")) as f:
+        man = json.load(f)
+    per_task = {
+        str(r["pid"]): r["n"]
+        for r in spark.range(10)
+        .groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    assert man["partition_rows"] == per_task
+    assert man["rows"] == sum(man["partition_rows"].values()) == out.count()
+    assert man["rows"] == 10 and man["n_partitions"] == len(per_task)
+
+    # an empty frame commits rows == 0 and resumes without recomputing
+    sr.run("empty", lambda: spark.range(0))
+    with open(os.path.join(base, "empty.manifest.json")) as f:
+        man = json.load(f)
+    assert man["status"] == "complete" and man["rows"] == 0
+
+    def _never():
+        raise AssertionError("completed stage recomputed")
+
+    resumed = StageRunner(spark, base, run_id="rK").run("empty", _never)
+    assert resumed.count() == 0 and resumed.columns == ["id"]
 
 
 def test_recompute_invalidates_manifest_before_overwrite(
