@@ -11,8 +11,9 @@ manifest json carrying (run_id, stage, rows, per-write-partition row
 counts, wall seconds).  The manifest is filled from the footers of the
 part files just written, on the driver: a stage costs its parquet
 write and no other Spark job.  A re-entrant run loads any stage whose
-manifest says complete instead of recomputing — resume-equals-fresh is
-pinned by tests/test_resume.py.
+manifest says complete instead of recomputing, with the schema the
+manifest recorded, so loading runs no Spark job either —
+resume-equals-fresh is pinned by tests/test_resume.py.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ import time
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class StageRunner:
@@ -51,24 +53,30 @@ class StageRunner:
         d = os.path.join(self.base_dir, stage)
         return d, d + ".manifest.json"
 
-    def completed(self, stage: str) -> bool:
+    def _manifest(self, stage: str) -> dict | None:
+        """The stage's manifest if the stage can be resumed, else None."""
         _, mpath = self._paths(stage)
-        if not os.path.exists(mpath):
-            return False
         try:
             with open(mpath) as f:
                 m = json.load(f)
         except (json.JSONDecodeError, OSError):
-            # a manifest truncated by a crash mid-write (pre-atomic
-            # layouts) marks the stage incomplete, not the run broken
-            return False
+            # absent, or truncated by a crash mid-write (pre-atomic
+            # layouts): the stage is incomplete, not the run broken
+            return None
         if m.get("status") != "complete":
-            return False
+            return None
         if self.context_fp is not None and m.get("context_fp") != self.context_fp:
             # stage was computed under different parameters (or a
             # pre-fingerprint layout) — recompute rather than resume
-            return False
-        return True
+            return None
+        if "schema" not in m:
+            # pre-schema layout: recompute once rather than pay a
+            # schema-inference job on every resume
+            return None
+        return m
+
+    def completed(self, stage: str) -> bool:
+        return self._manifest(stage) is not None
 
     def run(
         self,
@@ -83,10 +91,12 @@ class StageRunner:
         content_sha rode in the same scan) loads fine but breaks the
         FIRST downstream select — recompute it instead of resuming."""
         data_dir, mpath = self._paths(stage)
-        if self.completed(stage):
-            out = self.spark.read.parquet(data_dir)
-            if set(required_cols) <= set(out.columns):
-                return out
+        m = self._manifest(stage)
+        if m is not None:
+            schema = StructType.fromJson(m["schema"])
+            if set(required_cols) <= set(schema.fieldNames()):
+                # the recorded schema: loading runs no inference job
+                return self.spark.read.schema(schema).parquet(data_dir)
         t0 = time.time()
         df = fn()
         # invalidate BEFORE the data overwrite: mode('overwrite')
@@ -131,6 +141,7 @@ class StageRunner:
             "run_id": self.run_id,
             "context_fp": self.context_fp,
             "stage": stage,
+            "schema": df.schema.jsonValue(),
             "rows": int(sum(part_rows.values())),
             "n_partitions": len(part_rows),
             "partition_rows": part_rows,
@@ -158,7 +169,11 @@ class StageRunner:
     def _append_metrics(self, manifest: dict) -> None:
         """jcr-equivalent metrics log (/root/reference/src/jcr.h:19-61)."""
         with open(os.path.join(self.base_dir, "metrics.jsonl"), "a") as f:
-            slim = {k: v for k, v in manifest.items() if k != "partition_rows"}
+            slim = {
+                k: v
+                for k, v in manifest.items()
+                if k not in ("partition_rows", "schema")
+            }
             f.write(json.dumps(slim) + "\n")
 
     def metrics(self) -> list[dict]:

@@ -1,22 +1,26 @@
-"""End-to-end dedup pipeline orchestration.
+"""End-to-end dedup pipeline: one plan, three barrier policies.
 
-destor's backup job is 6 pipelined phases over bounded queues
-(/root/reference/src/do_backup.c:32-41); here each phase is a Spark
-stage group with an optional durable checkpoint between them
-(SURVEY.md section 3.1 "Spark restatement"):
+destor defines its backup job once, as 6 phases over bounded queues
+(do_backup.c:32-41); jobs differ only in where they keep state.  `_plan`
+is that one definition here (SURVEY.md section 3.1):
 
-  read/extract -> exact pass -> signatures -> LSH pairs -> verify
-     -> [simhash pass] -> union-find -> assignments
+  signatures -> exact + LSH pairs -> verify -> [simhash] -> [substring]
+     -> edges -> union-find -> assignments
 
-`run_pipeline` is the in-memory composition (tests, benchmarks), with
-ephemeral parquet barriers at the signatures and edges links;
-`run_checkpointed` makes five stages durable through a StageRunner, so a
-killed job resumes from the last complete one with lineage + metrics.
+barrier(stage, fn, required_cols=()) decides what each of its five named
+links costs.  `run_pipeline` round-trips the `_BATCH_BARRIERS` links
+through parquet and leaves the rest lazy (`_ephemeral`).
+`run_checkpointed` makes all five durable (`StageRunner.run`), so a
+killed job resumes from the last complete one.  The flagship driver
+query `q_dedup_pipeline_assignments` is `_ephemeral` over the query
+barrier, with the portable md5 signature stage its DuckDB oracle
+reproduces.
 """
 
 from __future__ import annotations
 
 import atexit
+import functools
 import itertools
 import os
 import shutil
@@ -217,110 +221,121 @@ def signatures_stage(
     return minhash_op.with_signatures_from_text(keyed, cfg)
 
 
-def run_pipeline(
+# The links the in-memory policy writes; every other link stays lazy.
+# A lazy link read by several subtrees of one action recomputes its
+# lineage per subtree (~2x wall at 50k docs), so these are the links
+# with several consumers:
+# - signatures: the one text scan, read by exact, LSH, verify, simhash;
+# - edges: large-star CC references it 4x.  Unbarriered, at 4M
+#   docs/local[8] the ~6.3 GB simhash key-table exchange ran THREE
+#   times (~90 s of the 8-core leg); ~100 B/edge of parquet makes the
+#   fan-out O(edges) at every scale.
+# Candidate and verified pairs have one consumer each: barriering them
+# cost two round-trips for no recompute saved (r6 A/B, min of 2
+# alternating: 4.68 -> 3.47 s at 5k docs, 8.55 -> 6.91 s at 50k).
+_BATCH_BARRIERS = ("signatures", "edges")
+
+
+def _ephemeral(write):
+    """In-memory barrier policy: write(df, tag) -> DataFrame for the
+    links in _BATCH_BARRIERS, the rest lazy.  required_cols guards only
+    a durable resume, so it is ignored here."""
+
+    def barrier(stage, fn, required_cols=()):
+        df = fn()
+        return write(df, stage) if stage in _BATCH_BARRIERS else df
+
+    return barrier
+
+
+def _plan(
     pages: DataFrame,
     cfg: DedupConfig,
-    use_simhash: bool = True,
-    use_substring: bool = False,
+    barrier,
+    use_simhash: bool,
+    use_substring: bool,
+    signatures: DataFrame | None = None,
 ) -> PipelineResult:
-    # Materialize the reused stages eagerly (parquet barrier, see
-    # _materialize).  Eagerness matters: a lazy stage consumed by
-    # several subtrees of one action recomputes the whole lineage per
-    # subtree, which multiplied the wall time ~2x measured at 50k docs.
-    # destor's phases are hard barriers between queues
-    # (/root/reference/src/do_backup.c:32-41); these are the same
-    # barriers.
-    root = _mat_root(pages.sparkSession)
-
-    # ONE text scan for the whole job: content_sha (exact pass) is
-    # computed in the same pass as tokenize + signatures (JVM sha2
-    # beside the Arrow UDF), and the sigs barrier then feeds both the
-    # exact self-join and every LSH/simhash consumer.  Before r3 the
-    # exact pass had its own barrier and its own full scan of the raw
-    # text — at 100 TB the single largest avoidable IO.
-    sigs = _materialize(
-        signatures_stage(pages, cfg, with_sha=True), "sigs", root
+    """The dedup DAG, defined once (module docstring).  signatures
+    replaces the signature stage's plan (the flagship query's portable
+    md5 stage).  content_sha rides in that stage: one text scan."""
+    sigs = barrier(
+        "signatures",
+        lambda: signatures_stage(pages, cfg, with_sha=True)
+        if signatures is None
+        else signatures,
+        # pre-r3 checkpoints have a complete signatures stage WITHOUT
+        # content_sha; resuming one would fail at the exact pass's select
+        required_cols=("url", "warc_ts", "content_sha"),
     )
+    # bucket_stats: this run's hot-bucket inventory informs the next
+    # run's salting (destor-HAR, har_rewrite.c:17-180).  Not
+    # candidate_pairs(...)[1], which re-runs the job's largest shuffle.
+    bucket_stats = barrier(
+        "bucket_stats",
+        lambda: lsh_op.bucket_stats_only(lsh_op.explode_bands(sigs), cfg),
+    )
+    # the pair relations feed only edges: lazy under every policy, never
+    # run by a resume past edges; a caller consuming one from
+    # PipelineResult recomputes it from the signatures link
     exact_edges = exact_op.exact_pairs(
         sigs.select("url", "warc_ts", "content_sha")
     )
     pairs, _ = lsh_op.candidate_pairs(sigs, cfg)
-    # stats via the count-only aggregate: row-identical to the tuple's
-    # second element but a consumer touching res.bucket_stats pays one
-    # lean (band,key,count) shuffle instead of re-running the
-    # collect_list groupBy — the job's largest shuffle — from the sigs
-    # barrier a second time.
-    bucket_stats = lsh_op.bucket_stats_only(lsh_op.explode_bands(sigs), cfg)
-    # pairs and verified are SINGLE-consumer links in the chain
-    # sigs -> pairs -> verified -> edges (the edges barrier below
-    # materializes the whole chain once): barriering them bought no
-    # recompute protection and cost two parquet write+read cycles —
-    # measured r6 A/B (min of 2 alternating): 4.68 -> 3.47 s at 5k
-    # docs, 8.55 -> 6.91 s at 50k.  The sigs barrier stays: it feeds
-    # exact + LSH + verify + simhash (4 consumers).  PipelineResult
-    # still exposes both lazily; a caller consuming them recomputes
-    # from the sigs barrier (same lazy contract as exact_edges).
     verified = verify_op.verify_pairs(pairs, sigs, cfg)
 
-    all_edges = _edge_union(
-        pages, sigs, exact_edges, verified, cfg, use_simhash, use_substring
-    )
-    # Barrier the union BEFORE connected components: large-star
-    # references the edge relation 4x (sym union + m-join), and
-    # without a barrier each reference drags the full upstream —
-    # measured at 4M docs/local[8]: the ~6.3 GB simhash key-table
-    # exchange ran THREE times as concurrent AQE query stages
-    # (exchange-reuse canonicalization that held at 2M broke at 4M),
-    # ~90 s of the 8-core leg's wall.  A ~100 B/edge parquet barrier
-    # makes the fan-out O(edges), deterministically, at every scale.
-    # (run_checkpointed barriers the same link via sr.run("edges").)
-    all_edges = _materialize(all_edges, "edges", root)
+    def edge_union() -> DataFrame:
+        frames = [exact_edges, verified.select("url_a", "url_b")]
+        if use_simhash:
+            # a cheap count picks the candidate-index physics; pair
+            # semantics identical either way (auto_index_config)
+            n_live = sigs.filter(F.col("n_shingles") > 0).count()
+            sim_cfg = simhash_op.auto_index_config(cfg, n_live)
+            frames.append(simhash_op.simhash_pairs(sigs, sim_cfg))
+        if use_substring:
+            frames.append(
+                substring_op.substring_pairs(
+                    pages.select("url", "warc_ts", "text"), cfg
+                )
+            )
+        return functools.reduce(DataFrame.unionByName, frames).distinct()
 
-    comps = cluster_op.connected_components(all_edges, cfg.max_cc_rounds)
-    assignment = assign_op.assignments(pages, comps)
+    edges = barrier("edges", edge_union)
+    comps = barrier(
+        "components",
+        lambda: cluster_op.connected_components(edges, cfg.max_cc_rounds),
+    )
     return PipelineResult(
         signatures=sigs,
         exact_edges=exact_edges,
         candidate_pairs=pairs,
         verified_pairs=verified,
         bucket_stats=bucket_stats,
-        assignments=assignment,
-        mat_root=root,
+        assignments=barrier(
+            "assignments", lambda: assign_op.assignments(pages, comps)
+        ),
     )
 
 
-def _edge_union(
+def run_pipeline(
     pages: DataFrame,
-    sigs: DataFrame,
-    exact_edges: DataFrame,
-    verified: DataFrame,
     cfg: DedupConfig,
-    use_simhash: bool,
-    use_substring: bool,
-) -> DataFrame:
-    """The exact ∪ verified ∪ [simhash] ∪ [substring] edge relation,
-    deduplicated.  ONE definition for both run_pipeline and
-    run_checkpointed — the two paths previously carried drift-prone
-    copies of this block, and batch-vs-checkpointed parity depends on
-    them staying identical."""
-    frames = [exact_edges, verified.select("url_a", "url_b")]
-    if use_simhash:
-        # one cheap count over the materialized barrier (n_shingles
-        # column only) picks the candidate-index physics; pair
-        # semantics identical either way (auto_index_config docstring)
-        n_live = sigs.filter(F.col("n_shingles") > 0).count()
-        sim_cfg = simhash_op.auto_index_config(cfg, n_live)
-        frames.append(simhash_op.simhash_pairs(sigs, sim_cfg))
-    if use_substring:
-        frames.append(
-            substring_op.substring_pairs(
-                pages.select("url", "warc_ts", "text"), cfg
-            )
-        )
-    out = frames[0]
-    for e in frames[1:]:
-        out = out.unionByName(e)
-    return out.distinct()
+    use_simhash: bool = True,
+    use_substring: bool = False,
+) -> PipelineResult:
+    """In-memory run: the _BATCH_BARRIERS links go through parquet under
+    a per-run dir; call PipelineResult.cleanup() once every frame of
+    the result is consumed."""
+    root = _mat_root(pages.sparkSession)
+    res = _plan(
+        pages,
+        cfg,
+        _ephemeral(lambda df, tag: _materialize(df, tag, root)),
+        use_simhash,
+        use_substring,
+    )
+    res.mat_root = root
+    return res
 
 
 def config_fingerprint(
@@ -355,10 +370,12 @@ def run_checkpointed(
     use_simhash: bool = True,
     use_substring: bool = False,
 ) -> DataFrame:
-    """Checkpointed variant: five durable stages, resume from the last
-    complete one (destor recipe semantics).  A stage is durable where a
-    second consumer or resume needs it; destor itself keeps only the
-    recipe and containers, its inter-phase queues stay in memory
+    """Checkpointed run: each of _plan's five links is a durable
+    StageRunner stage, and a rerun resumes from the last complete one
+    (destor recipe semantics) — with components complete it skips every
+    star round, and on a completed dir it returns the assignments
+    without recomputing anything.  destor itself keeps only the recipe
+    and containers; its inter-phase queues stay in memory
     (do_backup.c:32-41)."""
     sr = StageRunner(
         spark,
@@ -366,52 +383,4 @@ def run_checkpointed(
         run_id,
         context_fp=config_fingerprint(cfg, use_simhash, use_substring),
     )
-
-    # signatures: the Arrow UDF stage, read by the exact, LSH, verify
-    # and simhash passes.  ONE text scan: content_sha rides in it (see
-    # signatures_stage docstring), so the exact pass re-reads no text.
-    sigs = sr.run(
-        "signatures",
-        lambda: signatures_stage(pages, cfg, with_sha=True),
-        # pre-r3 checkpoints have a complete signatures stage WITHOUT
-        # content_sha (it lived in a separate content_hashes stage);
-        # resuming one would fail at the exact pass's select below
-        required_cols=("url", "warc_ts", "content_sha"),
-    )
-    # bucket_stats: persisted per run, the destor-HAR pattern — this
-    # run's hot-bucket inventory informs the next run's salting and is
-    # part of the per-partition lineage (har_rewrite.c:17-180 inherits
-    # the previous backup's sparse-container list the same way).
-    # bucket_stats_only, not candidate_pairs(...)[1]: the tuple form
-    # would re-run the whole collect_list explode/groupBy — the job's
-    # largest shuffle — a second time just to persist this small table.
-    sr.run(
-        "bucket_stats",
-        lambda: lsh_op.bucket_stats_only(lsh_op.explode_bands(sigs), cfg),
-    )
-
-    # edges: CC references the relation 4x (see run_pipeline), and it is
-    # the pair-level output a caller audits.  The exact, candidate and
-    # verified pair relations each feed only this stage, so they are
-    # planned inside it: no write of their own, and a resume past edges
-    # never plans them (same single-consumer audit as run_pipeline).
-    def edge_union() -> DataFrame:
-        exact_edges = exact_op.exact_pairs(
-            sigs.select("url", "warc_ts", "content_sha")
-        )
-        pairs, _ = lsh_op.candidate_pairs(sigs, cfg)
-        verified = verify_op.verify_pairs(pairs, sigs, cfg)
-        return _edge_union(
-            pages, sigs, exact_edges, verified, cfg,
-            use_simhash, use_substring,
-        )
-
-    edges = sr.run("edges", edge_union)
-    # components: the union-find result; a resume with it complete skips
-    # every star round.  assignments: the job's output, which a rerun on
-    # a completed dir returns without recomputing anything.
-    comps = sr.run(
-        "components",
-        lambda: cluster_op.connected_components(edges, cfg.max_cc_rounds),
-    )
-    return sr.run("assignments", lambda: assign_op.assignments(pages, comps))
+    return _plan(pages, cfg, sr.run, use_simhash, use_substring).assignments

@@ -1720,18 +1720,14 @@ def _pipeline_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_pipeline_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: the full dedup pipeline over the documents table —
     exact pass + MinHash/LSH candidates (cap/star skew rule) +
-    signature verify + union-find CC + canonical assignment — through
-    the same operator modules run_pipeline composes, configured with
-    the md5 permutation family so SQL_DEDUP_PIPELINE_ASSIGNMENTS
-    reproduces it exactly (see PIPE_* notes above)."""
+    signature verify + union-find CC + canonical assignment — as the
+    same plan and batch barrier policy run_pipeline uses
+    (plans/pipeline._plan), configured with the md5 permutation family
+    so SQL_DEDUP_PIPELINE_ASSIGNMENTS reproduces it exactly (see PIPE_*
+    notes above)."""
     from destor_spark.config import DedupConfig
-    from destor_spark.operators import (
-        assign as assign_op,
-        cluster as cluster_op,
-        exact as exact_op,
-        lsh as lsh_op,
-        verify as verify_op,
-    )
+    from destor_spark.operators.portable_mh import pipeline_sigs_from_text
+    from destor_spark.plans.pipeline import _ephemeral, _plan
 
     cfg = DedupConfig(
         num_hashes=NUM_MH,
@@ -1740,34 +1736,23 @@ def q_dedup_pipeline_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
         tau=0.5,
         bucket_cap=PIPE_BUCKET_CAP,
     )
-    from destor_spark.operators.portable_mh import pipeline_sigs_from_text
-
     pages = _pipeline_pages(spark, sf_dir)
-
-    # one text scan feeds exact + LSH + verify (same fusion as
-    # run_pipeline's sigs barrier).  r6: sha256 + shingles + the 16 md5
-    # minima + band keys all come from the fused Arrow kernel
-    # (operators/portable_mh.py) — bit-identical to the r5 expression
-    # chain (parity: tests/test_portable_mh.py::test_pipeline_sigs_*),
-    # without the ~10^8 per-(p, shingle) JVM Md5 calls.
-    sigs = _barrier(
-        pipeline_sigs_from_text(
+    # r6: sha256 + shingles + the 16 md5 minima + band keys all come
+    # from the fused Arrow kernel (operators/portable_mh.py) —
+    # bit-identical to the r5 expression chain (parity:
+    # tests/test_portable_mh.py::test_pipeline_sigs_*), without the
+    # ~10^8 per-(p, shingle) JVM Md5 calls.
+    res = _plan(
+        pages,
+        cfg,
+        _ephemeral(_barrier),
+        use_simhash=False,
+        use_substring=False,
+        signatures=pipeline_sigs_from_text(
             _spread(pages), NUM_MH, MH_BANDS, MH_ROWS, K
         ),
-        "pipe_sigs",
     )
-
-    exact_edges = exact_op.exact_pairs(
-        sigs.select("url", "warc_ts", "content_sha")
-    )
-    pairs, _stats = lsh_op.candidate_pairs(sigs, cfg)
-    verified = verify_op.verify_pairs(pairs, sigs, cfg)
-    edges = _barrier(
-        exact_edges.unionByName(verified.select("url_a", "url_b")).distinct(),
-        "pipe_edges",
-    )
-    comps = cluster_op.connected_components(edges, cfg.max_cc_rounds)
-    return assign_op.assignments(pages, comps).select(
+    return res.assignments.select(
         F.col("url").cast("bigint").alias("doc_id"),
         F.col("cluster_id").cast("bigint").alias("cluster_id"),
         "is_canonical",

@@ -234,11 +234,6 @@ def build_session(
             or str(64 * 1024 * 1024),
         )
     )
-    # Event-log instrumentation for perf_eventlog.py attribution runs
-    # (opt-in: per-task metrics cost a little driver time).  Honored
-    # here so EVERY harness (perf_scaling/perf_opportunistic/
-    # perf_heap_ab) inherits it — the r5 heap A/B passed this env var
-    # but only perf_stages.py's private snippet consumed it.
     # Crashed-worker diagnosability (opt-in, same pattern as event
     # logs): a Python worker that dies in native code (numpy/Arrow)
     # otherwise surfaces only as "Python worker exited unexpectedly"
@@ -249,6 +244,10 @@ def build_session(
         b = b.config(
             "spark.sql.execution.pyspark.udf.faulthandler.enabled", "true"
         ).config("spark.python.worker.faulthandler.enabled", "true")
+    # Event-log instrumentation for perf_eventlog.py attribution runs
+    # (opt-in: per-task metrics cost a little driver time).  Honored
+    # here so every harness that builds its session through this
+    # function inherits it.
     evdir = os.environ.get("SPARK_GRAFT_EVENT_DIR")
     if evdir:
         os.makedirs(evdir, exist_ok=True)

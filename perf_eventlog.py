@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Spark event-log analyzer for scaling diagnosis.
 
-Reads the JSON event log(s) a perf_stages/perf_scaling run writes when
+Reads the JSON event log(s) a perf_scaling run writes when
 SPARK_GRAFT_EVENT_DIR is set and prints, per stage: wall, summed task
 run/CPU/GC time, scheduler delay, shuffle bytes, and the achieved
 parallelism (task-time / wall).  The two ratios that matter on this

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -39,10 +40,20 @@ def test_resume_equals_fresh(spark, cfg, smoke_corpus, ckpt_dir):
 
     pd.testing.assert_frame_equal(fresh, resumed, check_dtype=False)
 
+    # a rerun on the now-complete dir loads all five stages with their
+    # recorded schemas: no Spark job before its result is consumed
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-jobs", "rerun on a completed checkpoint")
+    try:
+        again = run_checkpointed(spark, pages, cfg, ckpt_dir, "rD")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("resume-jobs")) == []
+    pd.testing.assert_frame_equal(fresh, _assign_pdf(again), check_dtype=False)
+
 
 def test_metrics_lineage(spark, cfg, smoke_corpus, ckpt_dir):
-    import json
-
     pages_pd, _ = smoke_corpus
     pages = spark.createDataFrame(pages_pd)
     run_checkpointed(spark, pages, cfg, ckpt_dir, "rM")
@@ -82,13 +93,19 @@ def test_resume_recomputes_old_layout_signatures(spark, cfg, smoke_corpus,
     )
 
     # simulate the pre-r3 layout: complete signatures stage WITHOUT
-    # content_sha, all later stages absent
+    # content_sha, in its data and in the schema its manifest records,
+    # all later stages absent
     run_checkpointed(spark, pages, cfg, ckpt_dir, "rE")
     sig_dir = os.path.join(ckpt_dir, "signatures")
     old = spark.read.parquet(sig_dir).drop("content_sha")
     old.write.mode("overwrite").parquet(sig_dir + "_old")
     shutil.rmtree(sig_dir)
     os.rename(sig_dir + "_old", sig_dir)
+    with open(sig_dir + ".manifest.json") as f:
+        man = json.load(f)
+    man["schema"] = old.schema.jsonValue()
+    with open(sig_dir + ".manifest.json", "w") as f:
+        json.dump(man, f)
     for stage in ("bucket_stats", "edges", "components", "assignments"):
         os.remove(os.path.join(ckpt_dir, f"{stage}.manifest.json"))
         shutil.rmtree(os.path.join(ckpt_dir, stage))
@@ -108,7 +125,10 @@ def test_checkpointed_equals_batch_pipeline(spark, cfg, smoke_corpus,
     cols = ["url", "cluster_id", "is_canonical"]
     res = run_pipeline(pages, cfg, use_substring=True)
     batch = _assign_pdf(res.assignments.select(*cols))
+    # the batch policy writes only its two barrier links
+    assert sorted(os.listdir(res.mat_root)) == ["edges", "signatures"]
     res.cleanup()
+    assert not os.path.exists(res.mat_root)
     ckpt = _assign_pdf(
         run_checkpointed(spark, pages, cfg, ckpt_dir, use_substring=True)
         .select(*cols)
@@ -123,8 +143,6 @@ def test_resume_recomputes_on_config_change(spark, smoke_corpus, ckpt_dir):
     fingerprint and completed() requires a match.  Regression: resume
     was config-blind, so --tau 0.5 after a killed --tau 0.71 run
     silently returned stale results."""
-    import json
-
     from destor_spark.config import DedupConfig
 
     pages_pd, _ = smoke_corpus
@@ -171,8 +189,6 @@ def test_stage_manifest_from_footers_one_job(spark, tmp_path):
     """A durable stage costs its parquet write and nothing else: the
     manifest's row counts come from the part files' footers (no re-read
     job, no schema-inference job), keyed by write partition."""
-    import json
-
     from pyspark.sql import functions as F
 
     from destor_spark.plans.checkpoint import StageRunner
@@ -221,8 +237,6 @@ def test_recompute_invalidates_manifest_before_overwrite(
     manifest pointing at destroyed data: run() flips the manifest to
     'recomputing' before the data overwrite, so the old config's
     resume path recomputes instead of reading garbage."""
-    import json
-
     from destor_spark.plans.checkpoint import StageRunner
 
     base = str(tmp_path / "ck")
