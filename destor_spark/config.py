@@ -29,27 +29,29 @@ class DedupConfig:
     simhash_bits: int = 64
     simhash_radius: int = 3        # Hamming-ball radius
     simhash_blocks: int = 4        # pigeonhole blocks (radius < blocks)
-    # combination index (the 10^12-doc scale path): split into THIS many
-    # blocks and bucket on every (blocks - radius)-subset concatenation
-    # — e.g. 8 blocks/radius 3 -> C(8,5)=56 tables with 40-bit keys,
-    # ~2^24x more selective per bucket than a single 16-bit block.  Any
-    # pair within the radius leaves >= blocks-radius blocks untouched,
-    # so some subset matches exactly: still a COMPLETE candidate filter,
-    # and the exact bit_count verify keeps the final pair semantics
-    # identical to the pigeonhole path.  0 = classic pigeonhole.
+    # combination index (the Manku WWW'07 scale path): split into THIS
+    # many blocks and bucket on every (blocks - radius)-subset
+    # concatenation — e.g. 8 blocks/radius 3 -> C(8,5)=56 tables with
+    # 40-bit keys, ~2^24x more selective per bucket than a single 16-bit
+    # block.  Any pair within the radius leaves >= blocks-radius blocks
+    # untouched, so some subset matches exactly: still a COMPLETE
+    # candidate filter, and the exact bit_count verify keeps the final
+    # pair semantics identical to the pigeonhole path.  0 = classic
+    # pigeonhole, which the pipeline's simhash.auto_index_config
+    # upgrades to 8 blocks once the measured live-doc count crosses the
+    # occupancy threshold.
     simhash_combo_blocks: int = 0
     # --- substring pass ---
     substring_len: int = 200       # L: min shared-substring length (chars)
     # --- skew handling (destor analogue: segment-size bounds
     #     segmenting_method.c:88-109 and capping cap_rewrite.c) ---
-    bucket_cap: int = 64           # all-pairs above this switch to star pairing
+    bucket_cap: int = 64           # all-pairs above this switch to star
+                                   # pairing; also bounds the pair
+                                   # frame's array (lsh.bucket_pairs)
     bucket_hard_cap: int = 100_000 # buckets above this are flagged
                                    # strategy='star_hot' in bucket_stats
                                    # (still star-paired; the flag is the
                                    # next run's salting/pre-split input)
-    lsh_two_phase: bool = False    # True: size-preagg + semi-join path that
-                                   # never holds a bucket in one task (extreme
-                                   # skew regime); same pair semantics
     # canonical selection is FIXED to (warc_ts, url) ordering (destor:
     # first-copy-wins, kvstore_htable.c:44-53) — it is hardcoded at
     # every ordering site (exact.py, lsh.py, assign.py, oracle.py), so
@@ -92,17 +94,3 @@ DEFAULT_CONFIG = DedupConfig()
 
 # A cheap config for unit tests / the DuckDB-parity driver queries.
 SMALL_CONFIG = DedupConfig(num_hashes=32, bands=8, rows=4, tau=0.6)
-
-# The 10^12-doc cluster profile.  Pair SEMANTICS are identical to
-# DEFAULT_CONFIG (parity-gated in tests/test_simhash_combo.py and
-# tests/test_scale_config.py); only the physical strategies change:
-#   * simhash_combo_blocks=8 — the Manku WWW'07 combination index:
-#     C(8,5)=56 tables of 40-bit keys instead of 4 dense 16-bit
-#     blocks, ~2^24x more selective per bucket, the difference between
-#     bucket-join fanout that survives 10^12 docs and one that
-#     doesn't (pigeonhole's 16-bit blocks give 2^48 expected members
-#     per bucket at that scale);
-#   * lsh_two_phase=True — band-bucket pair generation via size
-#     pre-aggregation + semi-join, so no task ever materializes an
-#     oversized bucket in memory (boilerplate hot buckets).
-SCALE_CONFIG = DedupConfig(simhash_combo_blocks=8, lsh_two_phase=True)

@@ -944,7 +944,7 @@ def srp_near_dup_pairs(
 
     ex = near_dup_band_relation(emb, dim, bits, bands, id_col, vec_col)
     cfg = DedupConfig(bucket_cap=bucket_cap)
-    cand, _stats = bucket_pairs(ex, cfg)
+    cand = bucket_pairs(ex, cfg)
     v = emb.select(
         F.col(id_col).alias("vid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),

@@ -10,13 +10,16 @@ co-locates every bucket's members (SURVEY.md J1-J3).
 
 Skew strategy (SURVEY.md section 4 custom item 1; destor analogue:
 segment-size bounds segmenting_method.c:88-109 and capping
-cap_rewrite.c:44-107):
+cap_rewrite.c:44-107), decided per bucket inside the one operator — no
+config switch picks a physical path (the hot-key-in-the-operator
+argument of "Rock you like a hurricane", EuroSys'18):
 
-  * bucket size 1 .......... dropped before any pair work (inner join
-                             against the >=2 size table)
-  * 2 <= size <= bucket_cap  all-pairs inside the bucket, generated
-                             JVM-side from a collect_list array (max
-                             cap*(cap-1)/2 pairs per bucket)
+  * bucket size 1 .......... emits nothing (no later member to pair)
+  * 2 <= size <= bucket_cap  all-pairs inside the bucket: each member
+                             pairs with the members after it in
+                             (warc_ts, url) order, collected over a
+                             row frame of at most bucket_cap - 1 rows
+                             (max cap*(cap-1)/2 pairs per bucket)
   * size > bucket_cap ...... STAR pairing: every member pairs with the
                              bucket head (min (warc_ts, url)).  Linear
                              in bucket size, never materializes a giant
@@ -25,13 +28,16 @@ cap_rewrite.c:44-107):
                              oracle applies the identical rule, so
                              assignment parity is preserved.
 
-bucket_stats (band, key, size, strategy) is returned alongside the
-pairs for lineage/metrics (destor jcr analogue).
+No array ever holds more than bucket_cap urls; a bucket's rows live in
+the Window operator's spillable row buffer, not in one in-task array.
+
+bucket_stats (band, key, size, strategy), the run's hot-bucket
+inventory (destor jcr analogue), comes from bucket_stats_only alone.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from destor_spark.config import DedupConfig
@@ -55,38 +61,62 @@ def explode_bands(sigs: DataFrame) -> DataFrame:
     )
 
 
-def bucket_pairs(
-    ex: DataFrame, cfg: DedupConfig
-) -> tuple[DataFrame, DataFrame]:
+def bucket_pairs(ex: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Generic bucketed pair generation with the cap/star skew strategy.
 
     ex: (url, warc_ts, band, key) membership relation.
-    Returns (pairs(url_a, url_b), bucket_stats(band, key, size, strategy));
-    pairs are distinct across buckets, url-normalized (url_a < url_b
-    lexicographic — see _norm_pair; in-bucket ordering and star-head
-    selection remain by (warc_ts, url), first-copy-wins).
+    Returns pairs(url_a, url_b), distinct across buckets and
+    url-normalized (url_a < url_b lexicographic — see _norm_pair;
+    in-bucket ordering and star-head selection remain by
+    (warc_ts, url), first-copy-wins).
 
-    Two physical strategies with IDENTICAL pair semantics (the pandas
-    oracle mirrors the semantics, not the physical shape):
+    One shuffle on (band, key), ordered by (warc_ts, url).  A
+    whole-group frame gives every row its bucket's size and head; the
+    star branch (size > cap) emits (head, url), the all-pairs branch
+    keeps only 2 <= size <= cap rows BEFORE its sliding frame, so an
+    over-cap bucket never pays O(size * cap) for it.  Both branches read
+    the same exchange (ReusedExchange), so the input's plan — an
+    anchored-gram UDF, say — runs once.
 
-      * single-phase (default, cfg.lsh_two_phase=False): ONE groupBy
-        collects each bucket, pairs generated JVM-side from the array.
-        2 shuffles total.  A bucket materializes as one in-task array —
-        fine up to millions of members, the regime the cap/star rule
-        already targets.
-      * two-phase (cfg.lsh_two_phase=True): pre-aggregate bucket sizes,
-        drop singletons by semi-join, all-pairs only for small buckets,
-        star via a separate min-aggregate + join so no task ever holds
-        an oversized bucket in memory.  4 shuffles; the choice for
-        pathological hot buckets (boilerplate shingles at 10^12 docs).
-
-    Shared by the MinHash band pass and the SimHash block pass — both
-    are instances of destor's feature->segment-list index lookup
+    Shared by the MinHash band pass, the SimHash block pass, the
+    substring pass, SRP near-dup and the streaming delta — all
+    instances of destor's feature->segment-list index lookup
     (/root/reference/src/index/kvstore_htable.c:156-168).
     """
-    if not getattr(cfg, "lsh_two_phase", False):
-        return _bucket_pairs_single_phase(ex, cfg)
-    return _bucket_pairs_two_phase(ex, cfg)
+    ordered = Window.partitionBy("band", "key").orderBy("warc_ts", "url")
+    whole = ordered.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    members = ex.select(
+        "url",
+        "warc_ts",
+        "band",
+        "key",
+        F.count(F.lit(1)).over(whole).alias("size"),
+        F.first("url").over(whole).alias("head"),
+    )
+    star = members.filter(F.col("size") > cfg.bucket_cap).select(
+        F.col("head").alias("url_a"), F.col("url").alias("url_b")
+    )
+    later = ordered.rowsBetween(1, max(cfg.bucket_cap - 1, 1))
+    all_pairs = (
+        members.filter(F.col("size").between(2, cfg.bucket_cap))
+        .select("url", F.collect_list("url").over(later).alias("later"))
+        .select(
+            F.col("url").alias("url_a"), F.explode("later").alias("url_b")
+        )
+    )
+    return (
+        star.unionByName(all_pairs)
+        # a url present TWICE in one bucket (streaming store + re-crawl
+        # of the same page, or duplicate input rows) would otherwise
+        # emit the degenerate self-pair (X, X) — the rows differ on
+        # warc_ts, so the i<j frame does not exclude it; the star head
+        # pairs with itself the same way
+        .filter(F.col("url_a") != F.col("url_b"))
+        .select(*_norm_pair())
+        .distinct()
+    )
 
 
 def _strategy(size_col, cfg: DedupConfig):
@@ -104,14 +134,13 @@ def _strategy(size_col, cfg: DedupConfig):
 
 
 def bucket_stats_only(ex: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """The bucket_stats relation WITHOUT the pair relation.
+    """The bucket_stats relation (band, key, size, strategy) of the
+    buckets with >= 2 members — its one producer.
 
-    Row-identical to the stats output of bucket_pairs, but the shuffle
-    carries (band, key, partial_count) instead of member-struct arrays
-    (map-side combine on a plain count) — the right physics when a
-    consumer needs only the bucket inventory (run_checkpointed's HAR
-    lineage stage), where re-running the collect_list groupBy would
-    repeat the job's largest shuffle just to persist a tiny table."""
+    The shuffle carries (band, key, partial_count), not members (a
+    map-side combine on a plain count), so persisting the bucket
+    inventory (run_checkpointed's HAR lineage stage) never repeats the
+    pair pass's shuffle."""
     sizes = (
         ex.groupBy("band", "key")
         .agg(F.count(F.lit(1)).alias("size"))
@@ -137,121 +166,10 @@ def _norm_pair():
     )
 
 
-def _combos(ms):
-    """All i<j pairs of a sorted member-struct array, pure JVM."""
-    return F.flatten(
-        F.transform(
-            ms,
-            lambda x, i: F.transform(
-                F.slice(ms, i + 2, F.size(ms)),
-                lambda y: F.struct(
-                    x["url"].alias("url_a"), y["url"].alias("url_b")
-                ),
-            ),
-        )
-    )
-
-
-def _star(ms):
-    """head-to-member pairs (head = ms[0] = min (warc_ts, url))."""
-    head = F.element_at(ms, 1)["url"]
-    return F.transform(
-        F.slice(ms, 2, F.size(ms)),
-        lambda y: F.struct(head.alias("url_a"), y["url"].alias("url_b")),
-    )
-
-
-def _bucket_pairs_single_phase(
-    ex: DataFrame, cfg: DedupConfig
-) -> tuple[DataFrame, DataFrame]:
-    grouped = (
-        ex.groupBy("band", "key")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("warc_ts", "url"))).alias(
-                "ms"
-            )
-        )
-        .filter(F.size("ms") >= 2)
-    )
-    bucket_stats = grouped.select(
-        "band",
-        "key",
-        # cast: F.size is int32 while the two-phase path and
-        # bucket_stats_only derive size from F.count (int64) — the
-        # three producers of this relation must agree on schema, not
-        # just values (checkpointed stats tables get restored and
-        # compared across runs)
-        F.size("ms").cast("long").alias("size"),
-        _strategy(F.size("ms"), cfg).alias("strategy"),
-    )
-    pair_array = F.when(
-        F.size("ms") <= cfg.bucket_cap, _combos(F.col("ms"))
-    ).otherwise(_star(F.col("ms")))
-    pairs = (
-        grouped.select(F.explode(pair_array).alias("p"))
-        .select("p.url_a", "p.url_b")
-        # a url present TWICE in one bucket (streaming store + re-crawl
-        # of the same page, or duplicate input rows) would otherwise
-        # emit the degenerate self-pair (X, X) — the member structs
-        # differ on warc_ts, so i<j combination does not exclude it
-        .filter(F.col("url_a") != F.col("url_b"))
-        .select(*_norm_pair())
-        .distinct()
-    )
-    return pairs, bucket_stats
-
-
-def _bucket_pairs_two_phase(
-    ex: DataFrame, cfg: DedupConfig
-) -> tuple[DataFrame, DataFrame]:
-    sizes = ex.groupBy("band", "key").agg(F.count("*").alias("size"))
-    multi = sizes.filter(F.col("size") >= 2)
-
-    bucket_stats = multi.withColumn(
-        "strategy", _strategy(F.col("size"), cfg)
-    )
-
-    # Inner join drops singleton buckets (the vast majority) before any
-    # pair work; the sizes aggregate is tiny relative to ex.
-    members = ex.join(multi, ["band", "key"])
-
-    # --- small buckets: all-pairs, JVM combination generation ---
-    small = members.filter(F.col("size") <= cfg.bucket_cap)
-    grouped = small.groupBy("band", "key").agg(
-        F.array_sort(
-            F.collect_list(F.struct("warc_ts", "url"))
-        ).alias("ms")
-    )
-    small_pairs = (
-        grouped.select(F.explode(_combos(F.col("ms"))).alias("p"))
-        .select("p.url_a", "p.url_b")
-        # same self-pair guard as the single-phase path (a url twice in
-        # one bucket under different warc_ts)
-        .filter(F.col("url_a") != F.col("url_b"))
-    )
-
-    # --- oversized buckets: star to the bucket head (min (warc_ts,url)) ---
-    big = members.filter(F.col("size") > cfg.bucket_cap)
-    heads = big.groupBy("band", "key").agg(
-        F.min(F.struct("warc_ts", "url")).alias("head")
-    )
-    star_pairs = (
-        big.join(heads, ["band", "key"])
-        .filter(F.col("url") != F.col("head.url"))
-        .select(
-            F.col("head.url").alias("url_a"),
-            F.col("url").alias("url_b"),
-        )
-    )
-
-    pairs = (
-        small_pairs.unionByName(star_pairs).select(*_norm_pair()).distinct()
-    )
-    return pairs, bucket_stats
-
-
 def candidate_pairs(
     sigs: DataFrame, cfg: DedupConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """MinHash-LSH candidates: explode bands, then bucketed pair gen."""
-    return bucket_pairs(explode_bands(sigs), cfg)
+    """MinHash-LSH candidates and the band buckets' bucket_stats:
+    explode bands once, then bucketed pair generation."""
+    ex = explode_bands(sigs)
+    return bucket_pairs(ex, cfg), bucket_stats_only(ex, cfg)

@@ -268,20 +268,16 @@ def _plan(
         # content_sha; resuming one would fail at the exact pass's select
         required_cols=("url", "warc_ts", "content_sha"),
     )
+    pairs, stats = lsh_op.candidate_pairs(sigs, cfg)
     # bucket_stats: this run's hot-bucket inventory informs the next
-    # run's salting (destor-HAR, har_rewrite.c:17-180).  Not
-    # candidate_pairs(...)[1], which re-runs the job's largest shuffle.
-    bucket_stats = barrier(
-        "bucket_stats",
-        lambda: lsh_op.bucket_stats_only(lsh_op.explode_bands(sigs), cfg),
-    )
+    # run's salting (destor-HAR, har_rewrite.c:17-180)
+    bucket_stats = barrier("bucket_stats", lambda: stats)
     # the pair relations feed only edges: lazy under every policy, never
     # run by a resume past edges; a caller consuming one from
     # PipelineResult recomputes it from the signatures link
     exact_edges = exact_op.exact_pairs(
         sigs.select("url", "warc_ts", "content_sha")
     )
-    pairs, _ = lsh_op.candidate_pairs(sigs, cfg)
     verified = verify_op.verify_pairs(pairs, sigs, cfg)
 
     def edge_union() -> DataFrame:

@@ -153,11 +153,10 @@ def _grouped_pairs(e: DataFrame, key_col: str, id_col: str = "doc_id"):
     TWICE (both join sides) plus sorted both for the SMJ; grouping by
     key shuffles it once (guide section 2.4 — two operations keyed the
     same way share one exchange), and the i<j pair combinations are
-    generated JVM-side from the per-key sorted id array (the same
-    _combos shape the LSH bucket pass uses).  Callers apply the DF_CAP
-    hot-key anti-join FIRST, so every group is bounded by DF_CAP —
-    collect_list never holds an unbounded bucket (the scale guard the
-    LSH pass gets from cap/star).  Pair counts are identical: each
+    generated JVM-side from the per-key sorted id array.  Callers apply
+    the DF_CAP hot-key anti-join FIRST, so every group is bounded by
+    DF_CAP — collect_list never holds an unbounded bucket (the scale
+    guard the LSH pass gets from its bucket_cap row frame).  Pair counts are identical: each
     (a, b, key) co-occurrence appears exactly once per key (the e
     relation is distinct per (id, key) by construction)."""
     ds = F.array_sort(F.collect_list(id_col))

@@ -409,7 +409,7 @@ def run_incremental_dedup(
         members = retained.join(
             F.broadcast(new_keys), ["band", "key"], "left_semi"
         ).select("url", "warc_ts", "band", "key")
-        pairs, _stats = lsh_op.bucket_pairs(members, cfg)
+        pairs = lsh_op.bucket_pairs(members, cfg)
         new_urls = sigs.select("url")
         pairs = _materialize(
             pairs.join(
